@@ -67,6 +67,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_processing_spark import cache
 from bigdata_processing_spark.functions import text as T
 from bigdata_processing_spark.operators.compaction import recover_swap
 from bigdata_processing_spark.operators.store import (
@@ -184,28 +185,6 @@ def _store_uses_sbucket(path: str) -> bool:
     if not dirs:
         return True  # fresh index: new layout
     return all(glob.glob(os.path.join(d, "sbucket=*")) for d in dirs)
-
-# probe-call persists consumed lazily by callers (the returned pair
-# frame still reads them) — same loose-pool discipline as
-# queries/dedup._LOOSE_PERSISTS. The streaming sink releases after each
-# micro-batch's pairs are materialized; long-lived manual sessions call
-# release_loose_persists() themselves (or let session teardown drop it).
-_LOOSE_PERSISTS: list[DataFrame] = []
-
-
-def release_loose_persists() -> None:
-    """Unpersist every probe-call cache handed out so far. Call after
-    the pair frames returned by :func:`incremental_dup_pairs` have been
-    materialized (written/collected) — without this a per-micro-batch
-    caller accumulates one cached shingle frame per batch for the
-    session's lifetime."""
-    for df in _LOOSE_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # a stopped session's cache is already gone
-    _LOOSE_PERSISTS.clear()
-
 
 def _shingled(docs: DataFrame, text_col: str) -> DataFrame:
     return docs.select("doc_id", T.word_shingles(F.col(text_col), 2).alias("sh"))
@@ -501,7 +480,12 @@ def incremental_dup_pairs(
     (Pre-round-6 indexes without the sbucket layout fall back to one
     filtered pass of the full shingle table.) The candidate set is
     materialized eagerly (it prices the partition filter), so this
-    function runs jobs at call time rather than being fully lazy."""
+    function runs jobs at call time rather than being fully lazy.
+
+    The returned frame reads batch-sized frames held in the session
+    cache: call ``cache.release_held()`` once it has been materialized
+    (written or collected), not before — its local checkpoints cannot
+    be recomputed once released."""
     spark = new_docs.sparkSession
     stop = spark.read.parquet(f"{path}/stoplist")
     n_sb = _store_n_sbuckets(spark, path)  # the STORE's modulus, not config
@@ -524,9 +508,9 @@ def incremental_dup_pairs(
     # (curate_append hands the probe its exact-survivor frame — joins over
     # joins) the multiplied logical subtree OOM'd the driver just
     # RENDERING the tree string. Truncating lineage here bounds the plan
-    # for all downstream branches; blocks are batch-bounded and freed on
-    # GC (same discipline as operators/graph.py's star rounds).
-    new_shset = _shingled(new_docs, text_col).localCheckpoint(eager=True)
+    # for all downstream branches; blocks are batch-bounded and held in
+    # the session cache until the caller's release_held().
+    new_shset = cache.hold(_shingled(new_docs, text_col).localCheckpoint(eager=True))
     shex = new_shset.select("doc_id", F.explode("sh").alias("s"))
     sig = _sign_excluding(shex, stop)
 
@@ -577,7 +561,7 @@ def incremental_dup_pairs(
         # plan STRING grows multiplicatively and a chained append
         # pipeline OOM'd the driver rendering it (same lineage-truncation
         # move as operators/graph.py's star rounds)
-        anch = (
+        anch = cache.hold(
             old_sig.select(*sig_cols)
             .join(
                 F.broadcast(bsig),
@@ -620,7 +604,7 @@ def incremental_dup_pairs(
         a_jac = a_inter.cast("double") / (
             F.size("bsh") + F.size("ash") - a_inter
         )
-        anch = (
+        anch = cache.hold(
             anch.join(F.broadcast(bsh), "bdoc")
             .join(averify, "adoc")
             .filter(a_jac >= jaccard_threshold)
@@ -633,6 +617,11 @@ def incremental_dup_pairs(
         )
         anchored_ids = anch.select(F.col("bdoc").alias("doc_id"))
         sig = sig.join(F.broadcast(anchored_ids), "doc_id", "left_anti")
+    # batch-bounded; every candidate branch below (bucket totals, probe,
+    # within-batch, stars) re-embeds it, and unmaterialized each copy
+    # re-ran the signing and the anchor broadcast: a 56-doc append under
+    # the merge gate ran 565 broadcast jobs, 616 jobs in one count
+    sig = cache.hold(sig.localCheckpoint(eager=True))
 
     new_post = sig.select("doc_id", F.explode(_band_keys_col()).alias("bk")).select(
         "bk", "doc_id"
@@ -689,8 +678,7 @@ def incremental_dup_pairs(
     )
     if exact_pairs is not None:
         cand = cand.unionByName(exact_pairs)
-    cand = cand.distinct().persist()
-    _LOOSE_PERSISTS.append(cand)
+    cand = cache.hold(cand.distinct())
 
     # Two-stage verify (round 7 — the incremental sibling of the batch
     # family's prefilter): screen candidates on signature agreement
@@ -761,13 +749,11 @@ def incremental_dup_pairs(
         for i in range(N_HASHES):
             term = F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0)
             agree = term if agree is None else agree + term
-        cand = (
+        cand = cache.hold(
             cand.join(a, "d1").join(b, "d2")
             .filter(agree >= agree_min)
             .select("d1", "d2")
-            .persist()
         )
-        _LOOSE_PERSISTS.append(cand)
 
     ids = (
         cand.select(F.col("d1").alias("doc_id"))
@@ -811,8 +797,7 @@ def incremental_dup_pairs(
     # candidate-bounded (≤ |ids| rows): persist so the d1 and d2 join
     # sides share ONE pruned scan + semi join instead of evaluating the
     # subtree twice
-    shs = old_needed.unionByName(new_shset.select("doc_id", "sh")).persist()
-    _LOOSE_PERSISTS.append(shs)
+    shs = cache.hold(old_needed.unionByName(new_shset.select("doc_id", "sh")))
     s1 = shs.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
     s2 = shs.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2"))
@@ -960,7 +945,7 @@ def run_incremental_dedup_stream(
         pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch_id={bid}")
         append_to_minhash_index(index_path, batch_df, batch_id=bid,
                                 text_col=text_col)
-        release_loose_persists()  # pairs are on disk; drop the batch cache
+        cache.release_held()  # pairs are on disk; drop the batch cache
 
     writer = stream.writeStream.foreachBatch(sink).trigger(availableNow=True)
     if checkpoint:

@@ -405,11 +405,11 @@ def curate_append(
     is the incremental MinHash probe (batch-sized signing, bucket-keyed
     candidates, sbucket-pruned verification), and quality/decontam are
     per-doc over the batch. Nothing rescans indexed text."""
+    from bigdata_processing_spark import cache
     from bigdata_processing_spark.operators.graph import connected_components
     from bigdata_processing_spark.operators.incremental_dedup import (
         append_to_minhash_index,
         incremental_dup_pairs,
-        release_loose_persists,
     )
 
     state = _state_path(out_path)
@@ -506,7 +506,7 @@ def curate_append(
             pairs.select("d1", "d2"), src="d1", dst="d2"
         )
         near_removed = (
-            labels.toDF("doc_id", "cluster_id")
+            cache.hold(labels).toDF("doc_id", "cluster_id")
             .filter(F.col("doc_id") != F.col("cluster_id"))
             .select("doc_id")
         )
@@ -563,7 +563,7 @@ def curate_append(
     _write_fp_batch(state, batch_id, batch_docs, n_docs=n, n_fbuckets=n_fb)
     append_to_minhash_index(f"{state}/mh", batch_docs, batch_id=batch_id)
     _mark_batch_committed(spark, out_path, batch_id)
-    release_loose_persists()
+    cache.release_held()
     pairs.unpersist()
     bfp.unpersist()
     batch_docs.unpersist()

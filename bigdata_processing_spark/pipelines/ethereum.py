@@ -2,7 +2,8 @@
 
 Each function takes already-loaded DataFrames (use
 ``load_transactions``/``load_contracts``/``load_blocks``/``load_scams``
-to read the reference's CSV/JSON layouts with declared schemas) and
+to read the reference's CSV/JSON layouts with declared schemas; each
+job applies its reference job's own line validator) and
 returns the job's result DataFrame(s). Citations point at the RDD
 pipeline each replaces in /root/reference.
 
@@ -27,8 +28,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from bigdata_processing_spark.sources import read_csv, read_json
-from bigdata_processing_spark.sources.readers import non_empty, parsed_ok
+from bigdata_processing_spark import cache
+from bigdata_processing_spark.sources import read_json
+from bigdata_processing_spark.sources.readers import hex_prefixed, non_empty, parsed_ok
 
 # --------------------------------------------------------------------------
 # Input schemas (reference: 15/6/19-column CSVs, FIXTURES.md §A;
@@ -119,28 +121,59 @@ def _month(ts_col) -> F.Column:
 
 
 # --------------------------------------------------------------------------
-# Loaders: validator parity with the reference's good_line filters
+# Validators: each job keeps exactly the lines its reference job kept
+# (SURVEY.md §2.2 F1-F7). The loaders apply the arity rule (15 / 6 / 19
+# fields, whichever columns a job selects) and drop the lines no job's
+# validator keeps; each job then applies its own typed-field rule.
 # --------------------------------------------------------------------------
 
-def load_transactions(spark: SparkSession, path: str) -> DataFrame:
-    """reference etherTransactionsAnalysis.py:19-28,45-46 (F1): 15
-    fields, float value + timestamp; header dies on the failed parse."""
-    return read_csv(
-        spark, path, TRANSACTIONS_SCHEMA, header=True,
-        constraints=[parsed_ok("value", "block_timestamp")],
+def _f1() -> F.Column:  # etherTransactionsAnalysis.py:19-28
+    return parsed_ok("value", "block_timestamp")
+
+
+def _f2() -> F.Column:  # etherTop10Contracts.py:19-29
+    return hex_prefixed("to_address") & parsed_ok("value")
+
+
+def _f5() -> F.Column:  # etherTopMiners.py:18-26
+    return parsed_ok("size")
+
+
+def _f4() -> F.Column:  # etheroverhead.py:18-27
+    return _f5() & non_empty("miner") & parsed_ok("number")
+
+
+def _f6() -> F.Column:  # ethergasguzzlers.py:18-27
+    return parsed_ok("gas_price", "block_timestamp")
+
+
+def _read_lines(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The reference's S1 idiom, ``textFile`` + ``split(',')``: a line with
+    other than ``len(schema)`` fields is dropped whichever columns a job
+    selects (the CSV reader parses only those and pads short lines). Each
+    field is ``try_cast`` to its type: unparsable is NULL, for the job's
+    validator to drop."""
+    fields = F.split(F.col("value"), ",", -1)
+    return spark.read.text(path).filter(F.size(fields) == len(schema)).select(
+        *[fields[i].try_cast(f.dataType).alias(f.name) for i, f in enumerate(schema)]
     )
 
 
+def load_transactions(spark: SparkSession, path: str) -> DataFrame:
+    """15-field lines that F1, F2 or F6 keeps; the header dies on the
+    failed parse, as in the reference."""
+    return _read_lines(spark, path, TRANSACTIONS_SCHEMA).filter(_f1() | _f2() | _f6())
+
+
 def load_contracts(spark: SparkSession, path: str) -> DataFrame:
-    """reference etherTop10Contracts.py:31-40 (F3)."""
-    return read_csv(spark, path, CONTRACTS_SCHEMA, header=True,
-                    constraints=[non_empty("address")])
+    """6-field lines (F7, ethergasguzzlers.py:29-37; top10_contracts
+    adds F3's "0x" address)."""
+    return _read_lines(spark, path, CONTRACTS_SCHEMA)
 
 
 def load_blocks(spark: SparkSession, path: str) -> DataFrame:
-    """reference etheroverhead.py:18-27 / etherTopMiners.py:18-26 (F4/F5)."""
-    return read_csv(spark, path, BLOCKS_SCHEMA, header=True,
-                    constraints=[parsed_ok("size"), non_empty("miner")])
+    """19-field lines that F5 keeps (F4 keeps a subset of them)."""
+    return _read_lines(spark, path, BLOCKS_SCHEMA).filter(_f5())
 
 
 def load_scams(spark: SparkSession, path: str) -> DataFrame:
@@ -157,7 +190,7 @@ def load_scams(spark: SparkSession, path: str) -> DataFrame:
 
 def monthly_transactions(transactions: DataFrame) -> DataFrame:
     return (
-        transactions
+        transactions.filter(_f1())
         .groupBy(_month(F.col("block_timestamp")).alias("month"))
         .agg(
             F.count("*").alias("txn_count"),
@@ -174,8 +207,8 @@ def monthly_transactions(transactions: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def top10_contracts(transactions: DataFrame, contracts: DataFrame) -> DataFrame:
-    tx = transactions.filter(F.col("to_address").startswith("0x"))
-    ct = contracts.filter(F.col("address").startswith("0x")).select("address").distinct()
+    tx = transactions.filter(_f2())
+    ct = contracts.filter(hex_prefixed("address")).select("address").distinct()
     return (
         tx.join(F.broadcast(ct), tx.to_address == ct.address, "left_semi")
         .groupBy("to_address")
@@ -192,7 +225,7 @@ def top10_contracts(transactions: DataFrame, contracts: DataFrame) -> DataFrame:
 
 def top10_miners(blocks: DataFrame) -> DataFrame:
     return (
-        blocks.groupBy("miner")
+        blocks.filter(_f5()).groupBy("miner")
         .agg(F.sum("size").alias("total_size"))
         .orderBy(F.col("total_size").desc(), F.col("miner").asc())
         .limit(10)
@@ -204,7 +237,8 @@ def top10_miners(blocks: DataFrame) -> DataFrame:
 # (month, category) value series
 # (reference etherscams.py:45-59: json.loads + double flatMap + join +
 # three reduceByKey consumers — which recomputed the un-cached join
-# three times (SURVEY.md §3.3); here the joined frame is cached once.)
+# three times (SURVEY.md §3.3); here the joined frame is held in the
+# session cache once.)
 # --------------------------------------------------------------------------
 
 def scam_analysis(transactions: DataFrame, scams: DataFrame
@@ -214,14 +248,15 @@ def scam_analysis(transactions: DataFrame, scams: DataFrame
         F.col("rec.category").alias("category"),
         F.explode("rec.addresses").alias("address"),
     )
-    joined = (
+    transactions = transactions.filter(_f1())
+    # the reference's missed reuse, fixed (etherscams.py:55-59)
+    joined = cache.hold(
         transactions.join(
             F.broadcast(per_scam),
             transactions.to_address == per_scam.address,
             "inner",
         )
         .select("scam_id", "category", "value", "block_timestamp")
-        .cache()   # the reference's missed reuse, fixed (etherscams.py:55-59)
     )
     lucrative_id = (
         joined.groupBy("scam_id").agg(F.sum("value").alias("total_value"))
@@ -252,6 +287,7 @@ def scam_analysis(transactions: DataFrame, scams: DataFrame
 
 def gas_guzzlers(transactions: DataFrame, contracts: DataFrame,
                  top10_addresses: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    transactions = transactions.filter(_f6())
     month = _month(F.col("block_timestamp")).alias("month")
 
     avg_gas_price = (
@@ -297,7 +333,7 @@ def data_overhead(blocks: DataFrame) -> DataFrame:
     for c in _HEX_COLS:
         term = (F.length(c) - F.lit(2)) * F.lit(4)
         waste = term if waste is None else waste + term
-    return blocks.agg(F.sum(waste).alias("wasted_bits"))
+    return blocks.filter(_f4()).agg(F.sum(waste).alias("wasted_bits"))
 
 
 # --------------------------------------------------------------------------

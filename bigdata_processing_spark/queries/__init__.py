@@ -62,8 +62,8 @@ def register(name: str, oracle: Optional[str] = None, driver: bool = True):
 # hard_negative_probe_sweep, semantic_dedup_survivors/sweep) already
 # sit inside the window and keep their slots. The r12 lead block
 # (Hamming contract trio + the r12-changed plans) earned green
-# CORRECTNESS_r12 rows and slides down four; plan diffs for the new
-# lead are committed under plans/r13/.
+# CORRECTNESS_r12 rows and slides down four. `perfbench/run.py --trace 1`
+# reports each query's construct/plan/exec spans and plan-shape counts.
 # ---------------------------------------------------------------------------
 DRIVER_PRIORITY: tuple[str, ...] = (
     "embedding_neardup_pairs",

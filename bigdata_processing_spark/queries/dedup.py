@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_processing_spark import cache
 from bigdata_processing_spark.catalog import load_table, table_rows
 from bigdata_processing_spark.functions import text as T
 from bigdata_processing_spark.queries import register
@@ -122,31 +123,33 @@ def _pruned_sig_df(
 ) -> DataFrame:
     """doc_id → signature over the DF-PRUNED shingle set — the exact
     signatures the guarded LSH pipeline bands and prefilters on
-    (_scored_candidates' sig / the twins' sig_p).
+    (_scored_candidates' sig / the twins' sig_p). The audit queries'
+    read of the entry the candidate build fills (:func:`_psig`)."""
+    shex = _shingle_df(spark, sf_dir).select("doc_id", F.explode("sh").alias("s"))
+    return _psig(spark, sf_dir, shex, max_df, max_df_frac, _fits_broadcast(sf_dir))
 
-    Round 9: served from the SESSION memo _scored_candidates fills (the
-    audit queries call both — pre-memo each cold audit built the whole
-    shingle→df→signature chain twice). On a miss the fused one-shuffle
-    build runs here and fills the same memo."""
-    # the resolved regime is part of the key (ADVICE r9): a memo hit must
-    # not hand back a signature frame PLANNED under a different broadcast
+
+def _psig(
+    spark: SparkSession, sf_dir: str, shex: DataFrame,
+    max_df: int, max_df_frac: float, fits: bool,
+) -> DataFrame:
+    """The pruned-signature cache entry, built from ``shex`` on a miss:
+    shared by the candidate build and the audit queries, which otherwise
+    each built the whole shingle→df→signature chain."""
+
+    def build() -> DataFrame:
+        import math
+
+        # footer count == the shingle frame's count (row-preserving
+        # select of documents), with no Spark job
+        n_docs = table_rows(sf_dir, "documents")
+        eff = max(max_df, int(math.ceil(max_df_frac * n_docs)))
+        return _fused_pruned_sig(shex, eff, fits)
+
+    # the resolved regime is part of the key (ADVICE r9): a hit must not
+    # hand back a signature frame PLANNED under a different broadcast
     # regime than the caller's (e.g. a cap override forcing sort-merge)
-    fits = _fits_broadcast(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, max_df, max_df_frac, fits)
-    cached = _PSIG_MEMO.get(key)
-    if cached is not None:
-        return cached
-    import math
-
-    shset = _shingle_df(spark, sf_dir)
-    # footer count == shset.count() (row-preserving select of documents);
-    # shset is NOT persisted here, so the count job bought nothing (r12)
-    n_docs = table_rows(sf_dir, "documents")
-    shex = shset.select("doc_id", F.explode("sh").alias("s"))
-    eff = max(max_df, int(math.ceil(max_df_frac * n_docs)))
-    sig = _fused_pruned_sig(shex, eff, fits).persist()
-    _PSIG_MEMO[key] = sig
-    return sig
+    return cache.cached(spark, "psig", (sf_dir, max_df, max_df_frac, fits), build)
 
 
 def _fused_pruned_sig(shex: DataFrame, eff_df: int, fits_broadcast: bool) -> DataFrame:
@@ -330,36 +333,12 @@ _SQL_CAND_PREF = f"""
         )
 """
 
-# Session-scoped memo of the verified-pairs result: dup_clusters re-ran
-# the whole MinHash→LSH→verify pipeline that minhash_lsh_dup_pairs had
-# just computed (~75% of dup_clusters' 10×-scale cost, BASELINE.md).
-# Keyed by (Spark applicationId, sf_dir, threshold); the cached DataFrame is
-# persist()ed so the second consumer reads the materialized pairs
-# (pairs ≪ corpus) instead of re-shuffling the corpus.
-_PAIR_MEMO: dict[tuple[str, str, float], DataFrame] = {}
-_CAND_MEMO: dict[tuple[str, str], DataFrame] = {}
-# raw (d1, d2) candidate pairs BEFORE the exact-overlap join — the
-# verifiers that never read the overlap counts (the edit-distance
-# family) stop paying the array_intersect join for counts they discard
-# (round 11, the sf100 probe: 167 s / 75 GB of spill at 100× for
-# numbers thrown away).
-_RAWCAND_MEMO: dict[tuple, DataFrame] = {}
-# (appId, sf_dir, max_df, max_df_frac, fits_broadcast) → persisted PRUNED
-# signature frame (the resolved regime keys the memo so a cap override
-# can't be served a frame planned under the other regime).
-# Filled by _scored_candidates, read by _pruned_sig_df — the audit
-# queries consume both, and pre-memo each cold audit run built the
-# whole shingle→df→signature chain twice (r8 verdict wrong-item #2).
-_PSIG_MEMO: dict[tuple[str, str, int, float, bool], DataFrame] = {}
-# per-call persists consumed lazily by callers (can't be unpersisted at
-# create time) — evicted by clear_dedup_memos()
-_LOOSE_PERSISTS: list[DataFrame] = []
-
-
-# Registered queries that read the shared session memos: their
-# pipeline-order bench timing attributes the common subtree to whichever
-# ran first, so bench.py re-times them COLD (memos cleared) and the
-# regression gate reads the cold column (VERDICT r03 watch item #3).
+# Registered queries that touch a keyed session-cache entry (a hit or a
+# miss): their pipeline-order bench timing attributes the shared subtree
+# to whichever ran first, so bench.py re-times them COLD (cache cleared)
+# and the regression gate reads the cold column. tests/
+# test_queries_oracle.py checks this tuple against the entries each
+# registered query actually touches.
 MEMO_FAMILY = (
     "lsh_band_sweep",
     "minhash_lsh_dup_pairs",
@@ -369,83 +348,44 @@ MEMO_FAMILY = (
     "containment_dup_pairs",
     "edit_distance_dup_pairs",
     "lsh_recall_audit",
-    # round-4 audit/report queries that also read the session memos
     "minhash_estimate_audit",
     "dup_cluster_size_histogram",
     "dedup_verifier_matrix",
     "dedup_survivors_by_quality",
-    # embedding-assignment memo consumers
     "embedding_neardup_pairs",
     "semantic_dedup_survivors",
     "semantic_dedup_sweep",
     "hard_negatives_celled",
     "hard_negative_probe_sweep",
-    # round-5: the unguarded audit baseline shares _CAND_MEMO too
     "minhash_unguarded_dup_pairs",
     "incremental_dedup_pairs",
-    # round-7: the two-stage-verify audit reads the unfiltered cand memo
     "minhash_prefilter_audit",
+    "minhash_margin_sweep",
+    "curation_funnel",
 )
 
 
-# Output-level memo for the audit/report queries whose RESULTS are tiny
-# (a handful of rows) but whose tails re-run per invocation even when
-# the shared pipeline memos hit. Keyed like the other memos; cleared by
-# clear_dedup_memos, so the bench cold pass still measures standalone
-# cost for every MEMO_FAMILY member.
-_OUT_MEMO: dict[tuple, DataFrame] = {}
-
-
+# Output cache entry for the audit/report queries whose RESULTS are tiny
+# (a handful of rows) but whose tails re-run per invocation even when the
+# shared pipeline entries hit.
 def _memo_output(fn):
     import functools
 
     @functools.wraps(fn)
     def wrapper(spark, sf_dir, **kw):
-        key = (
-            fn.__name__,
-            spark.sparkContext.applicationId,
-            sf_dir,
-            tuple(sorted(kw.items())),
+        return cache.cached(
+            spark, "out", (fn.__name__, sf_dir, tuple(sorted(kw.items()))),
+            lambda: fn(spark, sf_dir, **kw),
         )
-        got = _OUT_MEMO.get(key)
-        if got is not None:
-            return got
-        out = fn(spark, sf_dir, **kw).persist()
-        out.count()
-        _OUT_MEMO[key] = out
-        return out
 
     return wrapper
 
 
 def clear_dedup_memos() -> None:
-    """Unpersist and drop every session memo + loose persist.
-
-    Long-lived sessions that touch many sf_dirs (pytest tmp dirs,
-    multi-scale sweeps, bench cold passes) would otherwise accumulate
-    persisted DataFrames in executor storage indefinitely. Also the
-    bench's cold-attribution switch: clearing between queries makes each
-    memoized-family query pay its own full pipeline cost."""
-    from bigdata_processing_spark.queries import dedup as _self
-
-    for memo in (_PAIR_MEMO, _CAND_MEMO, _RAWCAND_MEMO, _PSIG_MEMO,
-                 _self._LABEL_MEMO,
-                 _self._EDIT_PRE_MEMO, _self._SWEEP_MEMO, _OUT_MEMO,
-                 _self._EMB_MEMO):
-        for entry in memo.values():
-            # _EMB_MEMO holds (DataFrame, centroid list); the rest plain DFs
-            df = entry[0] if isinstance(entry, tuple) else entry
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a stopped session's cache is already gone
-        memo.clear()
-    for df in _LOOSE_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _LOOSE_PERSISTS.clear()
+    """Release the whole session cache (cache.clear) and forget the
+    measured corpus sizes — the bench's cold-attribution switch, and how
+    long-lived sessions keep executor storage from accumulating."""
+    cache.clear()
     _SIZE_MEMO.clear()
 
 
@@ -459,28 +399,24 @@ def _verified_dup_pairs(
     for pairs at/above ``jaccard_threshold``. Shared by
     minhash_lsh_dup_pairs and the connected-components clustering
     (memoized per session+dir+threshold+guards)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, jaccard_threshold,
-                max_df, max_bucket)
-    cached = _PAIR_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    # the estimate prefilter rides with the guards: the production
-    # (guarded) family prefilters before exact verification; the
-    # unguarded textbook baseline (minhash_unguarded_dup_pairs) stays
-    # prefilter-free so the audit diff isolates what each stage drops
-    agree_min = est_agree_min(jaccard_threshold) if max_bucket is not None else None
-    sc = _scored_candidates(spark, sf_dir, max_df=max_df, max_bucket=max_bucket,
-                            est_agree_min=agree_min)
-    jaccard = F.col("inter").cast("double") / (
-        F.col("n1") + F.col("n2") - F.col("inter")
+    def build() -> DataFrame:
+        # the estimate prefilter rides with the guards: the production
+        # (guarded) family prefilters before exact verification; the
+        # unguarded textbook baseline (minhash_unguarded_dup_pairs) stays
+        # prefilter-free so the audit diff isolates what each stage drops
+        agree_min = est_agree_min(jaccard_threshold) if max_bucket is not None else None
+        sc = _scored_candidates(spark, sf_dir, max_df=max_df, max_bucket=max_bucket,
+                                est_agree_min=agree_min)
+        jaccard = F.col("inter").cast("double") / (
+            F.col("n1") + F.col("n2") - F.col("inter")
+        )
+        return sc.select("d1", "d2", jaccard.alias("jaccard")).filter(
+            F.col("jaccard") >= jaccard_threshold
+        )
+
+    return cache.cached(
+        spark, "pairs", (sf_dir, jaccard_threshold, max_df, max_bucket), build
     )
-    out = (
-        sc.select("d1", "d2", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .persist()
-    )
-    _PAIR_MEMO[memo_key] = out
-    return out
 
 
 # Round 10: the regime switch moved to operators/regime.py so the whole
@@ -516,31 +452,17 @@ def _build_candidates(
     # forced vocab broadcast at 500k docs.
     fits_broadcast = _fits_broadcast(sf_dir, verify_broadcast_max_bytes)
     if max_df is not None:
-        import math
-
-        # effective cap: floor for tiny corpora, fraction at scale —
-        # n_docs via the persisted shingle frame (one row per doc)
-        eff_df = max(max_df, int(math.ceil(max_df_frac * n_docs)))
-        # fused one-shuffle build (see _fused_pruned_sig), PERSISTED into
-        # the session-level signature memo: consumed by the band keys and
-        # the estimate prefilter here, and by _pruned_sig_df in the audit
-        # queries — which otherwise rebuilt the whole chain per cold run
-        psig_key = (
-            spark.sparkContext.applicationId, sf_dir, max_df, max_df_frac,
-            fits_broadcast,
-        )
-        sig = _PSIG_MEMO.get(psig_key)
-        if sig is None:
-            sig = _fused_pruned_sig(shex, eff_df, fits_broadcast).persist()
-            _PSIG_MEMO[psig_key] = sig
+        # fused one-shuffle build (see _fused_pruned_sig) in the shared
+        # signature entry: consumed by the band keys and the estimate
+        # prefilter here, and by the audit queries
+        sig = _psig(spark, sf_dir, shex, max_df, max_df_frac, fits_broadcast)
     else:
         sig = _sig_from_shex(shex, broadcast_vocab=fits_broadcast)
         if est_agree_min is not None and est_agree_min > 0:
             # the prefilter consumes sig three times (band keys + both
             # estimate legs) — without the persist the shingle→signature
             # subtree recomputes for each (ADVICE r9)
-            sig = sig.persist()
-            _LOOSE_PERSISTS.append(sig)
+            sig = cache.hold(sig)
 
     band_keys = F.array(
         *[
@@ -559,8 +481,7 @@ def _build_candidates(
     # ungated form materialized a hot bucket's whole membership as one
     # array row, ~160 MB at a 1e7-member boilerplate band value.
     if max_bucket is not None:
-        bsz0 = bands.groupBy("bk").agg(F.count("*").alias("__n")).persist()
-        _LOOSE_PERSISTS.append(bsz0)
+        bsz0 = cache.hold(bands.groupBy("bk").agg(F.count("*").alias("__n")))
         under_bk = bsz0.filter(
             (F.col("__n") > 1) & (F.col("__n") <= max_bucket)
         ).select("bk")
@@ -648,26 +569,23 @@ def _candidate_pairs(
     family previously paid the full array_intersect verify join —
     167 s / 75 GB of sort spill at 100× — for overlap counts it
     discarded)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, max_df, max_bucket,
-                max_df_frac, verify_broadcast_max_bytes, est_agree_min)
-    cached = _RAWCAND_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    scored = _CAND_MEMO.get(memo_key)
+    key = (sf_dir, max_df, max_bucket, max_df_frac, verify_broadcast_max_bytes,
+           est_agree_min)
+    scored = cache.cached(spark, "cand", key)
     if scored is not None:
-        out = scored.select("d1", "d2")
-        _RAWCAND_MEMO[memo_key] = out
-        return out
-    shset = _shingle_df(spark, sf_dir).persist()
-    n_docs = shset.count()
-    cand = _build_candidates(
-        spark, sf_dir, shset, n_docs, max_df, max_bucket, max_df_frac,
-        verify_broadcast_max_bytes, est_agree_min,
-    ).persist()
-    cand.count()  # materialize (pairs ≪ corpus) ...
-    shset.unpersist()  # ... so the corpus-sized shingle cache can go now
-    _RAWCAND_MEMO[memo_key] = cand
-    return cand
+        return scored.select("d1", "d2")
+
+    def build() -> DataFrame:
+        shset = _shingle_df(spark, sf_dir).persist()
+        cand = _build_candidates(
+            spark, sf_dir, shset, shset.count(), max_df, max_bucket, max_df_frac,
+            verify_broadcast_max_bytes, est_agree_min,
+        ).persist()
+        cand.count()  # materialize (pairs ≪ corpus) ...
+        shset.unpersist()  # ... so the corpus-sized shingle cache can go now
+        return cand
+
+    return cache.cached(spark, "rawcand", key, build)
 
 
 def _scored_candidates(
@@ -720,18 +638,22 @@ def _scored_candidates(
     signatures through the band buckets instead would widen the
     (bk, doc_id) exchange ~3× for every candidate; the narrow broadcast
     join prefilters without touching the dominant shuffle.)"""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, max_df, max_bucket,
-                max_df_frac, verify_broadcast_max_bytes, est_agree_min)
-    cached = _CAND_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
+    key = (sf_dir, max_df, max_bucket, max_df_frac, verify_broadcast_max_bytes,
+           est_agree_min)
+    return cache.cached(spark, "cand", key, lambda: _score_candidates(spark, key))
+
+
+def _score_candidates(spark: SparkSession, key: tuple) -> DataFrame:
+    """The miss path of :func:`_scored_candidates` under its cache key:
+    the scored frame, persisted and materialized."""
+    sf_dir, max_df, max_bucket, max_df_frac, verify_broadcast_max_bytes, est_agree_min = key
     # Cache the shingle sets: reused by the signature pass and by both
     # sides of the verification join (without it Spark recomputes the
     # docs→shingles subtree four times — measured 4x slower).
     shset = _shingle_df(spark, sf_dir).persist()
-    raw = _RAWCAND_MEMO.get(memo_key)
+    raw = cache.cached(spark, "rawcand", key)
     if raw is not None:
-        # Memo reuse is now bidirectional (round 12, ADVICE r11): a
+        # Entry reuse is bidirectional (round 12, ADVICE r11): a
         # session that ran the edit family first materialized the raw
         # (d1, d2) frame under the same guard key — layer the exact
         # overlap join over it instead of re-running the whole LSH
@@ -836,10 +758,8 @@ def _scored_candidates(
     if not fits_broadcast:
         cf.unpersist()  # the scored output is cached; the fingerprinted
         # candidate frame has served its three consumers
-    # sig stays persisted: it lives in _PSIG_MEMO for the audit family
-    # (narrow — 9 fixed-width columns, ~100 B/doc) and is released by
-    # clear_dedup_memos with the other session memos
-    _CAND_MEMO[memo_key] = out
+    # sig stays persisted: it is the shared signature entry of the audit
+    # family (narrow — 9 fixed-width columns, ~100 B/doc)
     return out
 
 
@@ -1025,8 +945,7 @@ def incremental_dedup_pairs(
     import math as _math
 
     docs = load_table(spark, sf_dir, "documents")
-    shset = _shingle_df(spark, sf_dir).persist()
-    _LOOSE_PERSISTS.append(shset)
+    shset = cache.hold(_shingle_df(spark, sf_dir))
     shex = shset.select("doc_id", F.explode("sh").alias("s"))
 
     shex_idx = shex.filter(F.col("doc_id") % 4 != 0)
@@ -1050,8 +969,7 @@ def incremental_dedup_pairs(
     # bounded by construction (<= shingles-per-doc/MAX_DF_FRAC rows,
     # corpus-independent); the dictionary vocabulary is NOT (stop-list
     # pruning only removes the high-df tail) — regime-switch it.
-    sig = _sig_from_shex(shex_p, broadcast_vocab=_fits_broadcast(sf_dir)).persist()
-    _LOOSE_PERSISTS.append(sig)
+    sig = cache.hold(_sig_from_shex(shex_p, broadcast_vocab=_fits_broadcast(sf_dir)))
     sig.count()  # materialize NOW: consumers otherwise race to fill the
     # cache and the first wave re-runs the shingle subtree concurrently
 
@@ -1068,16 +986,14 @@ def incremental_dedup_pairs(
     # batch-bounded; persisted because it re-broadcasts under EVERY
     # consumer of the banded signature table (bucket sizes, both join
     # legs, stars) — unpersisted, each consumer re-ran the anchor join
-    anch = (
+    anch = cache.hold(
         sigi.join(
             F.broadcast(siga),
             [F.col(f"h{i}") == F.col(f"_n{i}") for i in range(N_HASHES)],
         )
         .groupBy("bdoc")
         .agg(F.min("doc_id").alias("adoc"))
-        .persist()
     )
-    _LOOSE_PERSISTS.append(anch)
     exact_pairs = anch.select(
         F.least("bdoc", "adoc").alias("d1"),
         F.greatest("bdoc", "adoc").alias("d2"),
@@ -1210,14 +1126,6 @@ def dup_clusters(
     return _cluster_labels(spark, sf_dir, jaccard_threshold).orderBy("doc_id")
 
 
-# Labels memo, mirroring _PAIR_MEMO one level up the pipeline: the
-# propagation fixpoint costs ~20 driver-coordinated joins, and both
-# dup_clusters and dedup_survivors need its output — the second
-# consumer should read the persisted (doc_id, cluster_id) result
-# (≪ corpus), not re-run the loop.
-_LABEL_MEMO: dict[tuple[str, str, float], DataFrame] = {}
-
-
 def _cluster_labels(
     spark: SparkSession, sf_dir: str,
     jaccard_threshold: float = JACCARD_THRESHOLD,
@@ -1226,24 +1134,28 @@ def _cluster_labels(
     cluster_id = the component's min doc_id — via large-star/small-star
     connected components (operators/graph.py), which converges in
     O(log² n) rounds instead of min-label propagation's O(diameter),
-    so driver coordination stops scaling with cluster shape."""
-    import logging
+    so driver coordination stops scaling with cluster shape.
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir, jaccard_threshold)
-    cached = _LABEL_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    from bigdata_processing_spark.operators.graph import connected_components
+    A shared cache entry, one level up the pipeline from the pairs: the
+    propagation fixpoint costs ~20 driver-coordinated joins, and both
+    dup_clusters and dedup_survivors need its output — the second
+    consumer reads the persisted result (≪ corpus), not the loop."""
 
-    # _verified_dup_pairs is memoized+persisted; projecting off it is cheap
-    pairs = _verified_dup_pairs(spark, sf_dir, jaccard_threshold).select("d1", "d2")
-    labels, rounds = connected_components(pairs, src="d1", dst="d2")
-    logging.getLogger(__name__).info(
-        "dup_clusters: connected components converged in %d star rounds", rounds
-    )
-    out = labels.toDF("doc_id", "cluster_id")  # already persisted+materialized
-    _LABEL_MEMO[memo_key] = out
-    return out
+    def build() -> DataFrame:
+        import logging
+
+        from bigdata_processing_spark.operators.graph import connected_components
+
+        # the pairs entry is persisted; projecting off it is cheap
+        pairs = _verified_dup_pairs(spark, sf_dir, jaccard_threshold).select("d1", "d2")
+        labels, rounds = connected_components(pairs, src="d1", dst="d2")
+        logging.getLogger(__name__).info(
+            "dup_clusters: connected components converged in %d star rounds", rounds
+        )
+        return labels  # already persisted+materialized
+
+    labels = cache.cached(spark, "labels", (sf_dir, jaccard_threshold), build)
+    return labels.toDF("doc_id", "cluster_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1626,12 +1538,6 @@ def _sql_emb_assign(n_iter: int = _EMB_TRAIN_ITERS) -> str:
 _SQL_EMB_ASSIGN = _sql_emb_assign()
 
 
-# Assignment memo (same shape as _PAIR_MEMO): both embedding_neardup_pairs
-# and semantic_dedup_survivors need the (vec_id, label, e, nrm, cell)
-# frame AND the centroid list; the second consumer reads the persisted
-# n-row result instead of re-running count + centroid collect + argmin.
-_EMB_MEMO: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
 # Above this many vectors the celled family's quantizer/assigner swap
 # the bit-contract interpreted folds for the Arrow matmul assigner
 # (round 12). The DuckDB twin (_SQL_EMB_ASSIGN) is exercised at sf0.01
@@ -1647,8 +1553,11 @@ EMB_EXACT_ASSIGN_MAX = 50_000
 
 
 def _emb_assigned(spark: SparkSession, sf_dir: str):
-    """(assigned base DataFrame, seed centroid list). Persisted per
-    (session, sf_dir).
+    """(assigned base DataFrame, seed centroid list): one shared cache
+    entry per (session, sf_dir). The celled family needs the
+    (vec_id, label, e, nrm, cell) frame AND the centroid list; later
+    consumers read the persisted n-row result instead of re-running
+    count + centroid collect + argmin.
 
     Precomputes each vector's norm ONCE (n rows) instead of re-folding
     per pair (n² folds); uses the join-based assigner — bit-identical
@@ -1659,44 +1568,42 @@ def _emb_assigned(spark: SparkSession, sf_dir: str):
     quantizer fit and the final assignment run on the Arrow matmul
     argmin instead (see the constant's note — the oracle scales stay on
     the exact path)."""
-    from bigdata_processing_spark.functions import vectors as V
-    from bigdata_processing_spark.operators.ivf import (
-        allpairs_cell_count,
-        seeded_assign_cells,
-        trained_centroids,
-    )
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMB_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings")
-    # footer row count == emb.count() (exact by the parquet spec); the
-    # cell-count contract sees the identical integer with no Spark job
-    n = table_rows(sf_dir, "embeddings")
-    n_cells = allpairs_cell_count(n)
-    exact = n <= EMB_EXACT_ASSIGN_MAX
-    cents = trained_centroids(
-        emb, n_cells, n_iter=_EMB_TRAIN_ITERS, exact=exact
-    )
-    base = emb.select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("e"),
-        V.norm(F.col("embedding")).alias("nrm"),
-    # spread the argmin fold across every core before assigning: the
-    # n x k scoring is CPU-bound interpreted arithmetic and the
-    # embeddings scan's size-based split under-parallelizes it
-    ).repartition(2 * spark.sparkContext.defaultParallelism)
-    if exact:
-        base = seeded_assign_cells(base, cents, carry=("label", "e", "nrm"))
-    else:
-        from bigdata_processing_spark.operators.clustering import _assign_udf
+    def build():
+        from bigdata_processing_spark.functions import vectors as V
+        from bigdata_processing_spark.operators.ivf import (
+            allpairs_cell_count,
+            seeded_assign_cells,
+            trained_centroids,
+        )
 
-        base = base.withColumn("cell", _assign_udf(cents)(F.col("e")))
-    base = base.persist()
-    _EMB_MEMO[memo_key] = (base, cents)
-    return base, cents
+        emb = load_table(spark, sf_dir, "embeddings")
+        # footer row count == emb.count() (exact by the parquet spec); the
+        # cell-count contract sees the identical integer with no Spark job
+        n = table_rows(sf_dir, "embeddings")
+        n_cells = allpairs_cell_count(n)
+        exact = n <= EMB_EXACT_ASSIGN_MAX
+        cents = trained_centroids(
+            emb, n_cells, n_iter=_EMB_TRAIN_ITERS, exact=exact
+        )
+        base = emb.select(
+            "vec_id",
+            "label",
+            F.col("embedding").cast("array<double>").alias("e"),
+            V.norm(F.col("embedding")).alias("nrm"),
+        # spread the argmin fold across every core before assigning: the
+        # n x k scoring is CPU-bound interpreted arithmetic and the
+        # embeddings scan's size-based split under-parallelizes it
+        ).repartition(2 * spark.sparkContext.defaultParallelism)
+        if exact:
+            base = seeded_assign_cells(base, cents, carry=("label", "e", "nrm"))
+        else:
+            from bigdata_processing_spark.operators.clustering import _assign_udf
+
+            base = base.withColumn("cell", _assign_udf(cents)(F.col("e")))
+        return base, cents
+
+    return cache.cached(spark, "emb", (sf_dir,), build)
 
 
 @register(
@@ -1854,7 +1761,7 @@ def semantic_dedup_survivors(
         "v1", "v2"
     )
     labels, _rounds = connected_components(pairs, src="v1", dst="v2")
-    labels = labels.toDF("vec_id", "cluster_id")
+    labels = cache.hold(labels).toDF("vec_id", "cluster_id")
 
     assigned, cents = _emb_assigned(spark, sf_dir)
     # centroid vectors arrive as a broadcast (cell, c) table; the
@@ -1970,14 +1877,11 @@ def semantic_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unsorted scored pairs: every grid point filters/aggregates the
     # pair SET — the registered pair query's global sort (and its
     # small-regime pre-sort exchange) would be discarded here
-    scored = (
+    scored = cache.hold(
         _emb_scored_pairs(
             spark, sf_dir, cosine_threshold=min(SEMDEDUP_SWEEP_EPS)
-        )
-        .select("v1", "v2", "cos_sim")
-        .persist()
+        ).select("v1", "v2", "cos_sim")
     )
-    _LOOSE_PERSISTS.append(scored)
     base, _cents = _emb_assigned(spark, sf_dir)
     tot = base.agg(F.count("*").alias("n_vec"))
 
@@ -1997,7 +1901,7 @@ def semantic_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tagged = p if tagged is None else tagged.unionByName(p)
     labels, _rounds = connected_components(tagged, src="src", dst="dst")
-    per_eps = labels.toDF("node", "comp").select(
+    per_eps = cache.hold(labels).toDF("node", "comp").select(
         F.pmod("node", F.lit(n_eps)).cast("int").alias("idx"),
         # integer DIV, not float floor: exact at any id magnitude
         F.expr(f"comp DIV {n_eps}").alias("cluster_id"),
@@ -2197,16 +2101,6 @@ def containment_dup_pairs(
 # 1 - 1/len similar here but can flip several shingles. O(len²) per
 # pair, so it ONLY ever runs on the candidate set, never the corpus.
 # ---------------------------------------------------------------------------
-# Pruned (pair, texts) set feeding the DP — memoized+persisted like the
-# other dedup-family intermediates so repeated calls (bench min-of-2,
-# scale smoke, verify sweeps) share one cache entry instead of leaking a
-# fresh persist per invocation. The barrier also stops Catalyst from
-# inlining the levenshtein expression into both the similarity filter
-# and the output projection and re-deriving the candidate subtree around
-# it (measured 29s vs 2s at sf0.1 for identical results).
-_EDIT_PRE_MEMO: dict[tuple[str, str, float], DataFrame] = {}
-
-
 def _edit_band_col(maxlen, theta: float):
     """Keep-boundary-covering band for ``levenshtein(x1, x2, band)``.
 
@@ -2249,12 +2143,26 @@ def _edit_scored_pairs(
     prune BEFORE the O(len·band) DP, in the integer form
     (5·|Δlen| <= maxlen) whose boundary decision matches the oracle
     bit-for-bit. The DP is CPU-bound per distinct pair: spread across
-    every core (2× defaultParallelism — scales with the rig)."""
+    every core (2× defaultParallelism — scales with the rig).
+
+    A shared cache entry like the other dedup-family intermediates, so
+    repeated calls (bench min-of-2, scale smoke, verify sweeps) share
+    one persisted frame. The barrier also stops Catalyst from inlining
+    the levenshtein expression into both the similarity filter and the
+    output projection and re-deriving the candidate subtree around it
+    (measured 29s vs 2s at sf0.1 for identical results)."""
+    return cache.cached(
+        spark, "edit_pre", (sf_dir, edit_sim_threshold),
+        lambda: _build_edit_pairs(spark, sf_dir, edit_sim_threshold),
+    )
+
+
+def _build_edit_pairs(
+    spark: SparkSession, sf_dir: str, edit_sim_threshold: float
+) -> DataFrame:
+    """The miss path of :func:`_edit_scored_pairs`: the frame, persisted
+    and materialized."""
     gap_mult = edit_len_gap_mult(edit_sim_threshold)
-    memo_key = (spark.sparkContext.applicationId, sf_dir, edit_sim_threshold)
-    cached = _EDIT_PRE_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     fp = docs.select(
         "doc_id", F.md5("text").alias("f"), F.length("text").alias("ln")
@@ -2311,18 +2219,11 @@ def _edit_scored_pairs(
         .join(dverd, ["f1", "f2"])
         .select("d1", "d2", "dist", "maxlen")
     )
+    # materialized here, not by the cache, so cf can go right after
     pre = same.unionByName(diff).persist()
-    # Eager materialization (round 13): dedup_verifier_matrix reads this
-    # frame from two aggregate branches of ONE action — a lazily-persisted
-    # cache makes those branches RACE and run the banded DP twice (the
-    # dominant tail of that query's cold run, measured ~2× the DP wall).
-    # The count executes the DP exactly once; every consumer (and the
-    # edit query's range-sort sampling pass) then reads the cache. The
-    # frame is distinct-text-pair sized — far below the corpus.
     pre.count()
     if _big:
         cf.unpersist()  # pre is cached; cf has served its consumers
-    _EDIT_PRE_MEMO[memo_key] = pre
     return pre
 
 
@@ -2545,12 +2446,8 @@ _SQL_SWEEP = (
 )
 
 
-# 4-row output memo: without it every bench/audit re-invocation re-runs
-# the 4 full-corpus bandings + pooled verification (~5-7 s warm)
-_SWEEP_MEMO: dict[tuple[str, str, float, int], DataFrame] = {}
-
-
 @register("lsh_band_sweep", oracle=_SQL_SWEEP)
+@_memo_output
 def lsh_band_sweep(
     spark: SparkSession, sf_dir: str,
     jaccard_threshold: float = JACCARD_THRESHOLD,
@@ -2564,15 +2461,10 @@ def lsh_band_sweep(
     is a per-row projection); each config's candidates are bounded by
     the bucket cap; exact Jaccard verification runs only on the pooled
     candidate union. Everything shuffles pair-ids and counts, never
-    documents."""
-    memo_key = (
-        spark.sparkContext.applicationId, sf_dir, jaccard_threshold, max_bucket
-    )
-    cached = _SWEEP_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
+    documents. The 4-row result is an output cache entry: without it
+    every bench/audit re-invocation re-runs the 4 full-corpus bandings +
+    pooled verification (~5-7 s warm)."""
     shset = _shingle_df(spark, sf_dir).persist()
-    _LOOSE_PERSISTS.append(shset)
     # unpruned dictionary vocabulary = corpus-growing: regime-switched
     # like _signature_df (the sweep bands the TEXTBOOK unpruned
     # signatures by design, so there is no df-cap bounding the vocab)
@@ -2580,7 +2472,6 @@ def lsh_band_sweep(
         shset.select("doc_id", F.explode("sh").alias("s")),
         broadcast_vocab=_fits_broadcast(sf_dir),
     ).persist()
-    _LOOSE_PERSISTS.append(sig)
 
     # ONE tagged pass for all four bandings: every config's band keys
     # explode together as (cfg, bk), so bucket sizing, capping, and the
@@ -2610,7 +2501,6 @@ def lsh_band_sweep(
         .distinct()
         .persist()
     )
-    _LOOSE_PERSISTS.append(cand_all)
 
     pool = cand_all.select("d1", "d2").distinct()
     s1 = shset.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
@@ -2627,7 +2517,6 @@ def lsh_band_sweep(
         .select("d1", "d2")
         .persist()
     )
-    _LOOSE_PERSISTS.append(ver)
 
     # Materialize the two pair caches in dependency order (round 13):
     # the final action reads cand_all from two branches and ver from two
@@ -2678,7 +2567,6 @@ def lsh_band_sweep(
     result.count()  # 4 rows — materialize, then the big intermediates can go
     for df in (shset, sig, ver, cand_all):
         df.unpersist()
-    _SWEEP_MEMO[memo_key] = result
     return result
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata_processing_spark import cache
 from bigdata_processing_spark.catalog import load_table, table_rows
 from bigdata_processing_spark.operators.regime import bcast_if_small
 from bigdata_processing_spark.queries import register
@@ -353,8 +354,6 @@ def _hashed_tf_knn_oracle() -> str:
 def hashed_tf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_processing_spark.functions import text as T
     from bigdata_processing_spark.functions import vectors as V
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
-
     # PERSIST BARRIER, load-bearing: without it Catalyst inlines the
     # md5-per-token featurization tree into the join and re-evaluates it
     # per PAIR — measured 179s vs ~1s at sf0.1. Materialized, each doc
@@ -365,7 +364,7 @@ def hashed_tf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # handful of partitions (measured at the 10x sweep: one 10-task
     # stage pinned a 32-core host). One ~n-row shuffle spreads it across
     # every core; 2x defaultParallelism scales with the rig.
-    docs = (
+    docs = cache.hold(
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
@@ -373,9 +372,7 @@ def hashed_tf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("nrm", V.norm(F.col("v")))
         .repartition(2 * spark.sparkContext.defaultParallelism)
-        .persist()
     )
-    _LOOSE_PERSISTS.append(docs)
     q = docs.filter(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("qid"), F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
@@ -517,17 +514,14 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyless map-side-combined aggregate off the persisted counts, so the
     corpus is still exploded exactly once. Oracle unchanged."""
     from bigdata_processing_spark.functions import text as T
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
     from bigdata_processing_spark.sources.writers import literal_df
 
     docs = load_table(spark, sf_dir, "documents")
-    cnt = (
+    cnt = cache.hold(  # two light consumers (top-k, total)
         docs.select(F.explode(F.filter(T.tokens(F.col("text")), lambda t: t != "")).alias("t"))
         .groupBy("t")
         .agg(F.count("*").alias("c"))
-        .persist()  # two light consumers (top-k, total); released below
     )
-    _LOOSE_PERSISTS.append(cnt)
     kmax = max(VOCAB_CURVE_KS)
     n_salts = 32
     wloc = Window.partitionBy("salt").orderBy(F.col("c").desc(), F.col("t").asc())
@@ -641,20 +635,17 @@ def hashed_tf_knn_celled(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed_centroids,
         seeded_assign_cells_intexact,
     )
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
     from bigdata_processing_spark.sources.writers import literal_df
 
     # same persist barrier as hashed_tf_knn: featurize each doc ONCE;
     # same pre-persist repartition (the n x k argmin fold is CPU-bound
     # and parquet splits under-parallelize the small-byte frame)
-    vecs = (
+    vecs = cache.hold(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", T.hashed_tf(F.col("text"), HASHED_TF_DIM).alias("v"))
         .withColumn("nrm", V.norm(F.col("v")))
         .repartition(2 * spark.sparkContext.defaultParallelism)
-        .persist()
     )
-    _LOOSE_PERSISTS.append(vecs)
     n_docs = vecs.count()  # one scalar: sizes the quantizer
     cents = seed_centroids(
         vecs, ivf_cell_count(n_docs), vec_col="v", id_col="doc_id"

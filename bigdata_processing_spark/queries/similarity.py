@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata_processing_spark import cache
 from bigdata_processing_spark.catalog import load_table, table_rows
 from bigdata_processing_spark.functions import vectors as V
 from bigdata_processing_spark.queries import register
@@ -64,16 +65,13 @@ def _persist_if_pruned(scored: DataFrame, n_rows: int) -> DataFrame:
     second evaluation into a read — and the eager count keeps the
     threshold broadcast job from building a multi-GB cache under
     spark.sql.broadcastTimeout. No-op (and no extra plan nodes) below
-    the bound, so fixture-scale plans are unchanged. Registered with
-    the dedup loose-persist pool for the bench cold-pass discipline."""
+    the bound, so fixture-scale plans are unchanged. Held in the
+    session cache for the bench cold-pass discipline."""
     from bigdata_processing_spark.operators.topk import PRUNE_MIN_ROWS
 
     if n_rows < PRUNE_MIN_ROWS:
         return scored
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
-
-    scored = scored.persist()
-    _LOOSE_PERSISTS.append(scored)
+    scored = cache.hold(scored)
     scored.count()
     return scored
 
@@ -434,20 +432,16 @@ def hard_negative_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_probe → BroadcastNestedLoopJoin), which re-evaluates its stream
     # side's subtree — without the persist the probe join + Arrow dot
     # kernel re-run per grid point (measured 15.7s vs 0.8s for the same
-    # 300-row result). Registered with the dedup loose-persist pool so
-    # bench's cold pass still measures the standalone cost.
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
-
-    cand = (
+    # 300-row result). Held in the session cache so bench's cold pass
+    # still measures the standalone cost.
+    cand = cache.hold(
         probes.join(
             c,
             (F.col("cell") == F.col("ccell"))
             & (F.col("clabel") != F.col("qlabel")),
         )
         .select("qid", "cid", "pr", cos.alias("cos_sim"))
-        .persist()
     )
-    _LOOSE_PERSISTS.append(cand)
     grid = literal_df(
         spark, [(p,) for p in HARD_NEG_PROBE_SWEEP], "n_probe int"
     )
@@ -874,8 +868,6 @@ def matryoshka_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs (evaluated once — the r10 double-eval fix stands), run two
     # group-limited top-5 legs over the cache, and intersect the k-row
     # results with a join.
-    from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         F.col("vec_id"),
@@ -894,13 +886,12 @@ def matryoshka_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nf").alias("qnf"),
         F.col("nt").alias("qnt"),
     )
-    joined = base.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
+    joined = cache.hold(base.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.col("vec_id").alias("cid"),
         (V.dot(F.col("qe"), F.col("e")) / (F.col("qnf") * F.col("nf"))).alias("cf"),
         (V.dot(F.col("qe16"), F.col("e16")) / (F.col("qnt") * F.col("nt"))).alias("ct"),
-    ).persist()
-    _LOOSE_PERSISTS.append(joined)
+    ))
     # Round 12: each leg's WindowGroupLimit locally sorted the whole
     # persisted pair frame (the 42 GB residual the r11 probe
     # adjudicated) — above the regime bound the histogram prune sorts
@@ -1462,22 +1453,16 @@ def pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (8 small ints + a norm per vector, ~40 B/row at any scale) so both
     # legs re-run only the broadcast join + O(M) lookups. Round 13: the
     # persist + its eager count run ONLY in the pruned regime that
-    # double-evaluates (mirroring _persist_if_pruned) — below the bound
+    # double-evaluates (_persist_if_pruned) — below the bound
     # the naive window reads the encode once and the count job plus
     # cache write were pure overhead; the candidate count itself is the
     # parquet footer row count (pq_encode is a row-preserving projection
     # of embeddings).
-    from bigdata_processing_spark.operators.topk import PRUNE_MIN_ROWS
-
-    cand = enc.select("vec_id", "nrm", *[f"k{m}" for m in range(PQ_M)])
     n_cand = table_rows(sf_dir, "embeddings")
     n_pairs = n_cand * max(1, n_cand // 100)
-    if n_pairs >= PRUNE_MIN_ROWS:
-        from bigdata_processing_spark.queries.dedup import _LOOSE_PERSISTS
-
-        cand = cand.persist()
-        _LOOSE_PERSISTS.append(cand)
-        cand.count()
+    cand = _persist_if_pruned(
+        enc.select("vec_id", "nrm", *[f"k{m}" for m in range(PQ_M)]), n_pairs
+    )
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
     )

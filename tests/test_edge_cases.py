@@ -328,3 +328,44 @@ def test_scored_candidates_reuses_raw_candidate_memo(spark):
             dd._build_candidates = orig
     finally:
         dd.clear_dedup_memos()
+
+
+def test_one_clear_releases_every_cache(spark, tmp_path):
+    """One clear_dedup_memos() call releases everything the session cache
+    handed out: keyed entries and held frames of dedup-family queries, a
+    held frame of an nlp query, and the held probe frames of the
+    incremental index. No RDD those runs persisted stays registered."""
+    import os
+
+    import bigdata_processing_spark.queries.dedup as dd
+    from bigdata_processing_spark.operators.incremental_dedup import (
+        build_minhash_index,
+        incremental_dup_pairs,
+    )
+    from bigdata_processing_spark.queries.nlp import hashed_tf_knn
+    from conftest import SF_SMALL
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    dd.clear_dedup_memos()
+    before = persisted()
+    dd.dedup_survivors(spark, SF_SMALL).collect()
+    dd.semantic_dedup_survivors(spark, SF_SMALL).collect()
+    hashed_tf_knn(spark, SF_SMALL).collect()
+    docs = spark.createDataFrame(
+        [(i, f"cache test doc {i} j{i} k{i*3} l{i*7}", "s") for i in range(40)],
+        "doc_id bigint, text string, source string",
+    )
+    idx = os.path.join(str(tmp_path), "mh_index")
+    build_minhash_index(docs, idx)
+    probe = spark.createDataFrame(
+        [(500, "cache test doc 7 j7 k21 l49", "s")],
+        "doc_id bigint, text string, source string",
+    )
+    assert [(r.d1, r.d2) for r in incremental_dup_pairs(probe, idx).collect()] \
+        == [(7, 500)]
+    assert persisted() - before, "the runs persisted nothing"
+
+    dd.clear_dedup_memos()
+    assert not persisted() - before

@@ -458,11 +458,11 @@ def test_streaming_bridge_crash_midbatch_replay_converges(spark, tmp_path):
             # stale pairs partial: half the batch's pair set
             p.write.mode("overwrite").parquet(f"{pairs}/batch_id=2")
             # stale postings/bucket_sizes partials, no shingles, no counts
+            from bigdata_processing_spark.cache import release_held
             from bigdata_processing_spark.operators.incremental_dedup import (
                 _band_keys_col,
                 _shingled,
                 _sign_excluding,
-                release_loose_persists,
             )
             stop = spark.read.parquet(f"{idx}/stoplist")
             shex = _shingled(half, "text").select(
@@ -475,7 +475,7 @@ def test_streaming_bridge_crash_midbatch_replay_converges(spark, tmp_path):
             post.groupBy("bk").agg(F.count("*").alias("n")).write.mode(
                 "overwrite"
             ).parquet(f"{idx}/bucket_sizes/batch_id=2")
-            release_loose_persists()
+            release_held()
             assert committed_batches(spark, idx) == {0, 1}  # marker absent
 
         # (re)start the stream from the same checkpoint: processes w1,
@@ -553,10 +553,8 @@ def test_probe_into_overcap_family_uses_representative_stars(spark, tmp_path):
     import math
     n_reps = math.ceil((n_fam + 2) / MAX_BUCKET)
     assert len(got) <= 4 * (n_reps + 1) * 2 + n_fam  # loose star bound
-    from bigdata_processing_spark.operators.incremental_dedup import (
-        release_loose_persists,
-    )
-    release_loose_persists()
+    from bigdata_processing_spark.cache import release_held
+    release_held()
 
 
 def test_legacy_store_probe_with_only_batch_excluded(spark, tmp_path):
@@ -614,10 +612,8 @@ def test_exact_clone_short_circuits_but_mutated_doc_reaches_stars(spark, tmp_pat
     assert all(d1 < n_fam for d1, _d2, _j in mut_pairs)
     assert all(abs(j - 31 / 32) < 1e-9 for _d1, _d2, j in mut_pairs)
     assert len(mut_pairs) <= n_fam + 1
-    from bigdata_processing_spark.operators.incremental_dedup import (
-        release_loose_persists,
-    )
-    release_loose_persists()
+    from bigdata_processing_spark.cache import release_held
+    release_held()
 
 
 def test_measure_agree_min_tunes_down_on_lossy_corpus(spark):

@@ -166,3 +166,59 @@ def test_exact_value_mode_carries_wei(spark, fixture_paths):
 def test_validator_dropped_bad_line(spark, fixture_paths):
     tx = load_transactions(spark, fixture_paths["tx"])
     assert tx.count() == 4  # header + malformed line both gone
+
+
+def test_each_job_keeps_exactly_its_reference_validators_lines(spark, tmp_path):
+    """Planted lines on which the reference validators disagree (SURVEY.md
+    §2.2): a short line is dropped by every job whichever columns it
+    reads; an unparsable value with a good gas price is kept by F6 (gas
+    guzzlers) only; an unparsable timestamp with a good value by F2 (top-10
+    contracts) only; a non-integer block number and an empty miner are
+    kept by F5 (top-10 miners) and dropped by F4 (data overhead)."""
+    tx = [
+        TX_HEADER,
+        _tx("0x1", "0xaaa", 1.0, 10.0, 1.0, TS_JAN),
+        _tx("0x2", "0xaaa", 1.0, 20.0, 2.0, TS_JAN),
+        _tx("0x3", "0xaaa", 1.0, 30.0, 3.0, TS_JAN),
+        ",".join(_tx("0x4", "0xaaa", 1.0, 40.0, 10.0, TS_JAN).split(",")[:12]),
+        _tx("0x5", "0xaaa", "notanumber", 50.0, 20.0, TS_JAN),
+        _tx("0x6", "0xaaa", 5.0, 60.0, 30.0, "notatime"),
+    ]
+    bk_header = (
+        "number,hash,parent_hash,nonce,sha3_uncles,logs_bloom,"
+        "transactions_root,state_root,receipts_root,miner,difficulty,"
+        "total_difficulty,size,extra_data,gas_limit,gas_used,timestamp,"
+        "transaction_count,base_fee_per_gas"
+    )
+
+    def _bk(num, miner, size):
+        return (f"{num},0xh,0xp,0xn,0x11,0x11,0x11,0x11,0x11,"
+                f"{miner},1,1,{size},0x,100,50,{TS_JAN},2,")
+
+    bk = [bk_header, _bk(1, "0xb", 1.0), _bk(2, "0xb", 2.0), _bk(3, "0xb", 2.0),
+          ",".join(_bk(4, "0xb", 8.0).split(",")[:13]),
+          _bk("notint", "0xb", 8.0), _bk(6, "", 50.0)]
+    paths = {}
+    for name, lines in (("tx", tx), ("bk", bk), ("ct", [
+        "address,bytecode,function_sighashes,is_erc20,is_erc721,block_number",
+        "0xaaa,0x60,sig,True,False,1",
+    ])):
+        paths[name] = str(tmp_path / f"{name}.csv")
+        with open(paths[name], "w") as f:
+            f.write("\n".join(lines) + "\n")
+    txs = load_transactions(spark, paths["tx"])
+    ct = load_contracts(spark, paths["ct"])
+    blocks = load_blocks(spark, paths["bk"])
+
+    assert [(r.txn_count, r.avg_value) for r in monthly_transactions(txs).collect()] \
+        == [(3, 1.0)]                                            # F1
+    top10 = top10_contracts(txs, ct)
+    assert [(r.to_address, r.total_value) for r in top10.collect()] \
+        == [("0xaaa", 8.0)]                                      # F2
+    price, used, _ = gas_guzzlers(txs, ct, top10)
+    assert [r.avg_gas_price for r in price.collect()] == [6.5]   # F6
+    assert [r.avg_gas_used for r in used.collect()] == [27.5]
+    assert [(r.miner, r.total_size) for r in top10_miners(blocks).collect()] \
+        == [("", 50.0), ("0xb", 13.0)]                           # F5
+    # F4: the three good blocks, five 0x11 columns of (4-2)*4 bits each
+    assert data_overhead(blocks).collect()[0].wasted_bits == 3 * 5 * 8

@@ -343,10 +343,10 @@ def test_incremental_probe_prunes_shingle_store(spark, tmp_path, n_sbuckets):
     the STORE's modulus (round-7 policy promotion)."""
     import os
 
+    from bigdata_processing_spark.cache import release_held
     from bigdata_processing_spark.operators.incremental_dedup import (
         build_minhash_index,
         incremental_dup_pairs,
-        release_loose_persists,
     )
     from bigdata_processing_spark.plans import explain_str
 
@@ -377,7 +377,7 @@ def test_incremental_probe_prunes_shingle_store(spark, tmp_path, n_sbuckets):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
     # and the result is right: the planted near-dup pair verifies
     assert [(r.d1, r.d2) for r in pairs.collect()] == [(7, 500)]
-    release_loose_persists()
+    release_held()
 
 
 def test_hashed_tf_knn_featurizes_once_via_cache(spark):

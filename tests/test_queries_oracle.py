@@ -8,15 +8,26 @@ import pytest
 from conftest import SF_SMALL
 from oracle_harness import compare
 
+from bigdata_processing_spark import cache
 from bigdata_processing_spark.queries import all_oracles, all_queries
+from bigdata_processing_spark.queries.dedup import MEMO_FAMILY
 
 _QUERIES = all_queries()
 _ORACLES = all_oracles()
+# query name -> whether its run touched a keyed session-cache entry
+_TOUCHED: dict[str, bool] = {}
+
+
+def _run(spark, name):
+    before = sum(cache.stats.values())
+    df = _QUERIES[name](spark, SF_SMALL)
+    _TOUCHED[name] = sum(cache.stats.values()) > before
+    return df
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_query_matches_oracle(spark, name):
-    df = _QUERIES[name](spark, SF_SMALL)
+    df = _run(spark, name)
     if name in _ORACLES:
         problems = compare(df, SF_SMALL, _ORACLES[name])
         assert not problems, f"{name}: {problems[:5]}"
@@ -24,6 +35,17 @@ def test_query_matches_oracle(spark, name):
         # rows-only contract for non-SQL-expressible ops
         assert df.count() >= 0
         assert df.columns
+
+
+def test_memo_family_is_the_set_of_cache_touchers(spark):
+    """MEMO_FAMILY (the bench's cold-attribution set) is exactly the set
+    of registered queries that touch a keyed session-cache entry, a hit
+    or a miss. Reads the runs above; only a query that did not run in
+    this session (a -k selection) runs here."""
+    for name in sorted(set(_QUERIES) - set(_TOUCHED)):
+        _run(spark, name)
+    assert len(set(MEMO_FAMILY)) == len(MEMO_FAMILY)
+    assert set(MEMO_FAMILY) == {n for n, hit in _TOUCHED.items() if hit}
 
 
 def test_every_oracle_has_a_query():

@@ -34,10 +34,10 @@ def main() -> None:
 
     from tools.sf1_dedup_proof import build_docs_scaled
 
+    from bigdata_processing_spark.cache import release_held
     from bigdata_processing_spark.operators.incremental_dedup import (
         build_minhash_index,
         incremental_dup_pairs,
-        release_loose_persists,
     )
 
     scaled = build_docs_scaled(spark, sf_dir, n, f"/tmp/sf1_dedup_proof_{n}x")
@@ -67,7 +67,7 @@ def main() -> None:
             pairs = incremental_dup_pairs(batch, idx)
             cnt = pairs.count()
             walls.append(round(time.monotonic() - t0, 2))
-            release_loose_persists()
+            release_held()
         report[f"sec_probe_{name}"] = min(walls)
         report[f"sec_probe_{name}_all"] = walls
         report[f"pairs_{name}"] = cnt
