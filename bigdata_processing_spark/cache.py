@@ -82,7 +82,9 @@ def hold(df: DataFrame) -> DataFrame:
     return df
 
 
-def _unpersist(df: DataFrame) -> None:
+def unpersist(df: DataFrame) -> None:
+    """Free ``df``'s storage, a local checkpoint's RDD included —
+    ``DataFrame.unpersist`` leaves a checkpoint's blocks registered."""
     try:
         df.unpersist()
         rdd = _checkpoint_rdd(df)
@@ -96,7 +98,7 @@ def release_held() -> None:
     """Unpersist every held frame."""
     with _LOCK:
         for df in _HELD:
-            _unpersist(df)
+            unpersist(df)
         _HELD.clear()
 
 
@@ -105,5 +107,5 @@ def clear() -> None:
     with _LOCK:
         release_held()
         for entry in _ENTRIES.values():
-            _unpersist(_frame(entry))
+            unpersist(_frame(entry))
         _ENTRIES.clear()

@@ -32,6 +32,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_processing_spark import cache
+
 log = logging.getLogger(__name__)
 
 _MAX_ROUNDS = 50  # safety bound ≫ log²(any real graph)
@@ -222,7 +224,7 @@ def connected_components(
             nxt = _canonical(
                 _small_star(_reorient(_large_star(canon)))
             ).localCheckpoint()
-            canon.unpersist()
+            cache.unpersist(canon)
             canon = nxt
             if _is_star_forest(canon):
                 break
@@ -240,5 +242,5 @@ def connected_components(
     # caller's choice; drop our round cache once labels are derived
     out = out.persist()
     out.count()
-    canon.unpersist()
+    cache.unpersist(canon)
     return out, rounds

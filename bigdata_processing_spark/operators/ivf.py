@@ -120,21 +120,17 @@ def _round6_half_up(x: float) -> float:
 
 
 def _fold_assign_np(Vm, C, cc):
-    """Argmin cell per row of ``Vm`` replaying the sequential fold:
-    loop over dims, vectorize over rows — every accumulation step is the
-    same single-rounded IEEE multiply + add the ``aggregate(zip_with)``
-    fold performs, in the same order, so scores (and therefore argmins,
-    first-occurrence = lowest cell) are bit-identical."""
+    """Argmin cell per row of ``Vm`` from :func:`V.fold_dot` scores — the
+    fold's exact doubles, so the argmins (first occurrence = lowest
+    cell) are those of the ``aggregate(zip_with)`` assignment."""
     import numpy as np
 
     out = np.empty(len(Vm), dtype=np.int64)
     for lo in range(0, len(Vm), _DRIVER_FIT_CHUNK):
         blk = Vm[lo:lo + _DRIVER_FIT_CHUNK]
-        acc = np.zeros((len(blk), len(C)))
-        for i in range(C.shape[1]):
-            acc = acc + blk[:, i][:, None] * C[:, i][None, :]
         out[lo:lo + _DRIVER_FIT_CHUNK] = np.argmin(
-            cc[None, :] - 2.0 * acc, axis=1
+            cc[None, :] - 2.0 * V.fold_dot(blk[:, None, :], C[None, :, :]),
+            axis=1,
         )
     return out
 
@@ -169,7 +165,7 @@ def _exact_fit_on_driver(
         return None
     # seed_centroids semantics: the k lowest-id vectors, in id order
     cents = Vm[:k].copy()
-    cc = np.array([_self_dot_np(c) for c in cents])
+    cc = V.fold_dot(cents, cents)
     for _ in range(n_iter):
         cells = _fold_assign_np(Vm, cents, cc)
         for cell in range(len(cents)):
@@ -177,15 +173,8 @@ def _exact_fit_on_driver(
             if len(members):
                 m = members.sum(axis=0) / len(members)
                 cents[cell] = [_round6_half_up(x) for x in m]
-        cc = np.array([_self_dot_np(c) for c in cents])
+        cc = V.fold_dot(cents, cents)
     return [list(map(float, c)) for c in cents]
-
-
-def _self_dot_np(v) -> float:
-    acc = 0.0
-    for x in v:
-        acc = acc + float(x) * float(x)
-    return acc
 
 
 def trained_centroids(

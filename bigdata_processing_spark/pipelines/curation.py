@@ -517,6 +517,9 @@ def curate_append(
         cur = cur.join(
             bcast_if_rows(near_removed, 2 * n_pairs), "doc_id", "left_anti"
         )
+    # held: the three counts and the emit below read this frame once
+    # instead of each re-running the probe/anti-join lineage
+    cur = cache.hold(cur)
     n3 = cur.count()
     stats.append(StageStats("near_dedup", n2, n3))
 

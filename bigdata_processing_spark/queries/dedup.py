@@ -1552,6 +1552,24 @@ _SQL_EMB_ASSIGN = _sql_emb_assign()
 EMB_EXACT_ASSIGN_MAX = 50_000
 
 
+def _pair_dot(sf_dir: str):
+    """Regime-switched pair dot of the celled family. Below the
+    exact-assign bound the pair volume is small (in-cell pairs ≈
+    n·cell_size/2) and the Arrow round trip DOMINATES the arithmetic
+    (measured ~1.1 s of fixed UDF cost vs ~0.05 s of fold on the sf0.1
+    pairs), so the JVM fold runs; above it the Arrow replay of the same
+    fold keeps the pair volume off the interpreted evaluator. Both
+    return the doubles of the oracle's ``list_dot_product``."""
+    from bigdata_processing_spark.functions import vectors as V
+
+    return V.dot_vectorized if _emb_big(sf_dir) else V.dot
+
+
+def _emb_big(sf_dir: str) -> bool:
+    """True above the exact-assign bound (footer row count, no job)."""
+    return table_rows(sf_dir, "embeddings") > EMB_EXACT_ASSIGN_MAX
+
+
 def _emb_assigned(spark: SparkSession, sf_dir: str):
     """(assigned base DataFrame, seed centroid list): one shared cache
     entry per (session, sf_dir). The celled family needs the
@@ -1653,8 +1671,6 @@ def _emb_scored_pairs(
     routing them here drops a clone-mass global sort (and the small
     regime's pre-sort exchange) they were discarding — measured in the
     7.7 GB spill of semantic_dedup_sweep's first 100x row."""
-    from bigdata_processing_spark.functions import vectors as V
-
     base, _cents = _emb_assigned(spark, sf_dir)
     a = base.select(
         F.col("vec_id").alias("v1"),
@@ -1671,17 +1687,7 @@ def _emb_scored_pairs(
         F.col("nrm").alias("n2"),
     )
     pairs = a.join(b, (a.label == b.label2) & (a.cell == b.cell2) & (a.v1 < b.v2))
-    # Pair-dot regime (round 13): below the exact-assign bound the pair
-    # volume is small (in-cell pairs ≈ n·cell_size/2) and the Arrow
-    # round-trip DOMINATES the arithmetic (measured ~1.1 s of fixed
-    # pandas-UDF cost vs ~0.05 s of fold on the sf0.1 pairs) — the JVM
-    # fold is also bit-identical to the oracle's list_dot_product, so
-    # the exact scales get MORE precise and faster at once. Above the
-    # bound (no oracle runs there) the vectorized kernel keeps the
-    # all-pairs-scale dot workload off the interpreted evaluator.
-    n = table_rows(sf_dir, "embeddings")
-    pair_dot = V.dot if n <= EMB_EXACT_ASSIGN_MAX else V.dot_vectorized
-    cos = pair_dot(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
+    cos = _pair_dot(sf_dir)(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2"))
     return pairs.select("v1", "v2", "label", cos.alias("cos_sim")).filter(
         F.col("cos_sim") >= cosine_threshold
     )

@@ -10,9 +10,10 @@ North-star LLM-pipeline surface (SURVEY.md §2.12). Two tiers:
   assignment). This is the 100TB path: partition the index by cell,
   probe only matching cells.
 
-All vector math is JVM-side fold expressions (functions/vectors.py);
-elements are cast to double pre-arithmetic so DuckDB oracles agree
-bit-for-bit.
+All vector math is the ordered fold of functions/vectors.py — JVM-side
+expressions, or above the exact-assign bound their bit-identical Arrow
+replay; elements are cast to double pre-arithmetic so DuckDB oracles
+agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from bigdata_processing_spark.catalog import load_table, table_rows
 from bigdata_processing_spark.functions import vectors as V
 from bigdata_processing_spark.queries import register
 from bigdata_processing_spark.sources.writers import literal_df
-from bigdata_processing_spark.queries.dedup import _SQL_EMB_ASSIGN
+from bigdata_processing_spark.queries.dedup import _SQL_EMB_ASSIGN, _emb_big, _pair_dot
 from bigdata_processing_spark.operators.topk import grouped_topk
 from bigdata_processing_spark.thresholds import (
     HARD_NEG_N_PROBE,
@@ -42,19 +43,6 @@ _COS = """list_dot_product(qe, ce)
 # for the 100× probe and beyond, where the brute truth leg's work is
 # linear in anchors.
 _SWEEP_ANCHOR_CAP = 512
-
-
-def _pair_dot(sf_dir: str):
-    """Regime-switched pair dot for the celled family (round 13): the
-    JVM sequential fold below the exact-assign bound — bit-identical to
-    the oracle's ``list_dot_product`` AND free of the ~1 s fixed Arrow
-    round-trip that dominated the small in-cell pair frames — the
-    vectorized numpy kernel above it, where pair volume pays for the
-    boundary and no oracle runs."""
-    from bigdata_processing_spark.queries.dedup import EMB_EXACT_ASSIGN_MAX
-
-    n = table_rows(sf_dir, "embeddings")
-    return V.dot if n <= EMB_EXACT_ASSIGN_MAX else V.dot_vectorized
 
 
 def _persist_if_pruned(scored: DataFrame, n_rows: int) -> DataFrame:
@@ -203,11 +191,37 @@ def hard_negatives(
     )
 
 
-def _anchor_probe_ranks(spark, base, cents) -> DataFrame:
-    """(qid, qlabel, qe, qn, cell, pr): every cell ranked per anchor by
-    the IVF assignment score (c·c − 2·e·c, ties by cell — the identical
-    ranking seeded_probe_cells / the oracle's ORDER BY use). Anchors =
-    vec_id % 100; centroids broadcast (k rows)."""
+def _anchor_probe_ranks(spark, base, cents, depth: int, arrow: bool) -> DataFrame:
+    """(qid, qlabel, qe, qn, cell, pr) for pr ≤ ``depth``: each anchor's
+    nearest cells ranked by the IVF assignment score (c·c − 2·e·c, ties
+    by cell — the identical ranking seeded_probe_cells / the oracle's
+    ORDER BY use). Anchors = vec_id % 100.
+
+    Two forms, identical rows (both score with the ordered fold):
+    ``arrow`` ranks each anchor's cells inside Arrow batches
+    (:func:`V.cell_ranks`, centroids in the UDF closure) and explodes the
+    first ``depth``; otherwise the anchors cross-join a broadcast k-row
+    centroid table and a window ranks the fold-scored rows. The window
+    form has no Arrow round trip, which costs more than the fold at
+    fixture scale; above it the anchors × cells rows, each carrying the
+    anchor's vector through the interpreted fold, dominate."""
+    q = base.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("qlabel"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qn"),
+    )
+    if arrow:
+        # outer: a plain posexplode makes Catalyst infer a non-empty
+        # filter on the UDF's output, which evaluates the UDF twice;
+        # every anchor gets min(depth, k) ≥ 1 cells, so rows are equal
+        return (
+            q.withColumn("cells", V.cell_ranks(cents, depth)(F.col("qe")))
+            .select("qid", "qlabel", "qe", "qn",
+                    F.posexplode_outer("cells").alias("pos", "cell"))
+            .select("qid", "qlabel", "qe", "qn", "cell",
+                    (F.col("pos") + 1).alias("pr"))
+        )
 
     def self_dot(v):
         acc = 0.0
@@ -218,12 +232,6 @@ def _anchor_probe_ranks(spark, base, cents) -> DataFrame:
     cdf = literal_df(
         spark, [(i, list(c), self_dot(c)) for i, c in enumerate(cents)],
         "cell int, cent array<double>, cc double",
-    )
-    q = base.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
     )
     sc = F.col("cc") - 2.0 * F.aggregate(
         F.zip_with("qe", "cent", lambda x, y: x * y),
@@ -236,6 +244,7 @@ def _anchor_probe_ranks(spark, base, cents) -> DataFrame:
         .select("qid", "qlabel", "qe", "qn", "cell", sc.alias("s"))
         .withColumn("pr", F.row_number().over(pw))
         .drop("s")
+        .filter(F.col("pr") <= depth)
     )
 
 
@@ -304,9 +313,7 @@ def hard_negatives_celled(
     from bigdata_processing_spark.queries.dedup import _emb_assigned
 
     base, cents = _emb_assigned(spark, sf_dir)
-    probes = _anchor_probe_ranks(spark, base, cents).filter(
-        F.col("pr") <= n_probe
-    )
+    probes = _anchor_probe_ranks(spark, base, cents, n_probe, _emb_big(sf_dir))
     c = base.select(
         F.col("vec_id").alias("cid"),
         F.col("label").alias("clabel"),
@@ -406,11 +413,6 @@ def hard_negative_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         math.ceil(n_anchors / _SWEEP_ANCHOR_CAP)
         if n_anchors > _SWEEP_ANCHOR_CAP else None
     )
-    probes = _anchor_probe_ranks(spark, base, cents)
-    if keep_mod is not None:
-        probes = probes.filter(
-            F.pmod(F.xxhash64(F.col("qid")), F.lit(keep_mod)) == 0
-        )
     # Only cells within the grid's DEEPEST probe depth can ever reach
     # the output (every grid point filters c.pr <= n_probe ≤ max grid;
     # the oracle's unfiltered cand CTE is pruned by the same predicate
@@ -419,7 +421,13 @@ def hard_negative_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # between scoring 12/1563 of the corpus per anchor and ALL of it
     # (round 12; the probe measured 150.9 s of Arrow dot work on the
     # unfiltered frame).
-    probes = probes.filter(F.col("pr") <= max(HARD_NEG_PROBE_SWEEP))
+    probes = _anchor_probe_ranks(
+        spark, base, cents, max(HARD_NEG_PROBE_SWEEP), _emb_big(sf_dir)
+    )
+    if keep_mod is not None:
+        probes = probes.filter(
+            F.pmod(F.xxhash64(F.col("qid")), F.lit(keep_mod)) == 0
+        )
     c = base.select(
         F.col("vec_id").alias("cid"),
         F.col("label").alias("clabel"),

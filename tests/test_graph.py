@@ -77,6 +77,18 @@ def test_cc_chain_converges_in_log_rounds(spark):
     assert rounds <= 10, f"chain took {rounds} rounds — not contracting"
 
 
+def test_cc_distributed_path_frees_round_checkpoints(spark):
+    """Each star round's edge set is a local checkpoint, whose blocks
+    ``DataFrame.unpersist`` leaves registered: once the caller drops the
+    labels, the distributed path must leave no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    got, rounds = _run(spark, [(i, i + 1) for i in range(31)])
+    assert got == {i: 0 for i in range(32)}
+    assert rounds >= 2  # several superseded round checkpoints
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_cc_pseudorandom_graph(spark):
     # deterministic pseudo-random sparse graph over 200 nodes
     edges = []
