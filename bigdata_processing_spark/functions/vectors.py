@@ -119,23 +119,17 @@ def dot_vectorized(a, b) -> Column:
     return arrow_udf(_adot, "double")(as_double(a), as_double(b))
 
 
-def _spark_order(s, cell):
-    """Ascending sort key of (score, cell) as Spark orders doubles:
-    nulls first, NaN after every number."""
-    if s is None:
-        return (0, 0.0, cell)
-    return (2, 0.0, cell) if s != s else (1, s, cell)
-
-
 def cell_ranks(centroids, depth: int):
     """Column factory: ``array<int>`` of the ``depth`` nearest cells per
     vector, ranked by the IVF assignment score ``c·c − 2·(e·c)`` with
     ties by cell — the order of a window ``ORDER BY s, cell`` over the
     fold-scored (vector × centroid) cross join, computed inside Arrow
     batches instead of as one row per (vector, cell). Scores come from
-    :func:`fold_dot`, so the ranks are those of the fold form; a vector
-    the fold scores null (null, ragged or holding a null) is ranked by
-    the per-row fold. The centroids ride in the UDF closure."""
+    :func:`fold_dot`, so the ranks are those of the fold form. The fold
+    scores a null, ragged or null-holding vector null against every
+    cell, and a window puts tied nulls in cell order, so such a vector
+    gets the first ``depth`` cells. The centroids ride in the UDF
+    closure."""
     from pyspark.sql.functions import arrow_udf
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -151,11 +145,6 @@ def cell_ranks(centroids, depth: int):
             out[lo:lo + block] = np.argsort(s, axis=1, kind="stable")[:, :depth]
         return out
 
-    def _rank_py(e):
-        s = [None if f is None else cc[j] - 2.0 * f
-             for j, f in enumerate(_fold_py(e, c) for c in C)]
-        return sorted(range(k), key=lambda j: _spark_order(s[j], j))[:depth]
-
     def _ranks(e: pa.Array) -> pa.Array:
         Q = _matrix(e)
         if Q is not None and Q.shape[1] == d:
@@ -164,7 +153,7 @@ def cell_ranks(centroids, depth: int):
             ranks = np.array(
                 [_rank_rows(np.array([r]))[0]
                  if r is not None and len(r) == d and None not in r
-                 else _rank_py(r) for r in e.to_pylist()],
+                 else np.arange(depth) for r in e.to_pylist()],
                 dtype=np.int32,
             ).reshape(-1, depth)
         offsets = np.arange(0, ranks.size + 1, depth, dtype=np.int32)

@@ -18,6 +18,8 @@ agree bit-for-bit.
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -223,14 +225,10 @@ def _anchor_probe_ranks(spark, base, cents, depth: int, arrow: bool) -> DataFram
                     (F.col("pos") + 1).alias("pr"))
         )
 
-    def self_dot(v):
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        return acc
-
+    C = np.asarray(cents, dtype=np.float64)
+    cc = V.fold_dot(C, C)
     cdf = literal_df(
-        spark, [(i, list(c), self_dot(c)) for i, c in enumerate(cents)],
+        spark, [(i, list(c), float(cc[i])) for i, c in enumerate(cents)],
         "cell int, cent array<double>, cc double",
     )
     sc = F.col("cc") - 2.0 * F.aggregate(

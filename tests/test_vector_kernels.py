@@ -70,9 +70,9 @@ def test_arrow_probe_ranks_equal_window_form(spark):
 
 
 def test_fold_kernels_on_null_ragged_and_nan_rows(spark):
-    """Rows the zero-copy view cannot take get the fold's result from
-    the per-row fold: a null dot, and all-null scores ranked first (ties
-    by cell); NaN stays on the vectorized path and ranks last. One
+    """Rows the zero-copy view cannot take get the fold's result: a null
+    dot, and all-null scores ranked first (ties by cell, so the first
+    cells); NaN stays on the vectorized path and ranks last. One
     partition, so clean and null rows share an Arrow batch."""
     nan = float("nan")
     vecs = [[1.0, 2.0, 3.0], None, [1.0, 2.0], [1.0, None, 3.0],
